@@ -1,16 +1,38 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+import graft.operators.{PinnedStages, SessionMemo}
 object Bench {
+  /** The catalog pass loop every main shares: `n` passes over `names`,
+    * each query handed to `run` with its 1-based pass number.
+    *
+    * After each query it sweeps the localCheckpoint blocks the query
+    * pinned (outside `run`, so outside any timer — the sweep is a walk
+    * over the persistent-RDD map plus async block-removal messages).
+    * Without this, ~90 queries' worth of pinned stages accumulate in
+    * executor storage and unrelated late-alphabet queries slow 4-5x
+    * (round 7: dd_simhash 2.5->10.3 s, text_ngram_novelty pass 2 SLOWER
+    * than pass 1). The cross-query memos are registered shared and
+    * survive.
+    *
+    * Between passes it calls [[SessionMemo.reset]], so every pass
+    * re-pays each producer stage's real cost; otherwise the memoized
+    * stages would time near zero and a per-query min would underclaim. */
+  def passLoop[A](spark: SparkSession, names: Seq[String], n: Int)(
+      run: (Int, String) => A): Seq[Seq[(String, A)]] =
+    (1 to n).map { i =>
+      if (i > 1) SessionMemo.reset(spark)
+      names.map { name =>
+        val r = run(i, name)
+        PinnedStages.sweepTransient(spark)
+        name -> r
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = SparkEntry.cores
+    val spark = SparkEntry.session()
     def loadavg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
@@ -24,7 +46,7 @@ object Bench {
       }
       spark.range(1000000).selectExpr("sum(id)", "md5(cast(id as string))").count()
       SparkEntry.queries.get("d1_count_by_operation").foreach(_(spark, sfDir).count())
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // Deterministic order (Map iteration is incidental), with one
     // dependency: dd_cluster consumes the pair stage dd_minhash_lsh
     // materializes (session-memoized), so run the producer first — the
@@ -46,35 +68,11 @@ object Bench {
         case n @ "pipe_tokenize_pack" => Seq("text_bpe_train", n)
         case n                        => Seq(n)
       }
-    // A FAILED query records +Infinity, never its time-to-failure: a
-    // fast pass-2 error (e.g. a dropped temp-view dependency) would
-    // otherwise win the per-query min and fabricate a speedup. A query
-    // failing BOTH passes surfaces as -1 in the output (visibly wrong),
-    // and the contract line carries an errors count.
-    // Between queries, sweep the localCheckpoint blocks the finished
-    // query pinned (outside its timer — the sweep is driver-side map
-    // iteration plus async block-removal messages). Without this, ~90
-    // queries' worth of pinned stages accumulate in executor storage and
-    // unrelated late-alphabet queries slow 4-5x (round 7: dd_simhash
-    // 2.5->10.3 s, text_ngram_novelty pass 2 SLOWER than pass 1). The
-    // cross-query dedup memos are registered shared and survive.
-    def sweep(): Seq[(String, Double)] = ordered.map { name =>
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-      val t = (System.nanoTime() - t0) / 1e9
-      graft.operators.PinnedStages.sweepTransient(spark)
-      name -> (if (ok) t else Double.PositiveInfinity)
-    }
     // N full passes (default 3), per-query MIN: a transient machine-load
     // spike in one pass cannot fabricate a regression (round 6 recorded a
-    // phantom 5x on e1_global_merge from a loaded sandbox). The session
-    // memos — and their now-explicitly-tracked checkpoint blocks — are
-    // dropped between passes so every pass re-pays each producer stage's
-    // real cost; otherwise the memoized stages would time near zero and
-    // the min would underclaim. All pass totals and the load averages
-    // are emitted so a reader can judge the run's trustworthiness.
+    // phantom 5x on e1_global_merge from a loaded sandbox). All pass
+    // totals and the load averages are emitted so a reader can judge the
+    // run's trustworthiness.
     // Honest config handling: a non-numeric value fails with a clear
     // message (not a bare NumberFormatException mid-startup) and an
     // explicit 1 is honored — a single-pass smoke run is a legitimate
@@ -83,18 +81,31 @@ object Bench {
     val passes = passesRaw.toIntOption.filter(_ >= 1).getOrElse(
       throw new IllegalArgumentException(
         s"SPARK_GRAFT_BENCH_PASSES must be a positive integer, got '$passesRaw'"))
-    val passResults: Seq[Seq[(String, Double)]] = (1 to passes).map { i =>
-      if (i > 1) {
-        graft.queries.DedupQueries.clearSessionMemos()
-        graft.queries.TokenizerQueries.clearSessionMemos()
-        graft.queries.PcaQueries.clearSessionMemos()
-        graft.queries.SketchQueries.clearSessionMemos()
-        graft.queries.SimilarityQueries.clearSessionMemos()
-        graft.operators.AsOfJoin.clearBoundsCache()
-        graft.operators.PinnedStages.releaseShared(spark)
+    // A FAILED query records +Infinity, never its time-to-failure: a
+    // fast pass-2 error (e.g. a dropped temp-view dependency) would
+    // otherwise win the per-query min and fabricate a speedup. A query
+    // failing EVERY pass surfaces as -1 in the output (visibly wrong),
+    // and the contract line carries an errors count. The exception's
+    // class and message go to stderr and onto the query's record. Only
+    // NonFatal is caught: an OOM or an interrupt aborts the run instead
+    // of passing for a slow query.
+    val outcomes: Seq[Seq[(String, Either[String, Double])]] =
+      passLoop(spark, ordered, passes) { (_, name) =>
+        val t0 = System.nanoTime()
+        try {
+          SparkEntry.queries(name)(spark, sfDir).count()
+          Right((System.nanoTime() - t0) / 1e9)
+        } catch { case NonFatal(e) =>
+          val why = s"${e.getClass.getName}: ${e.getMessage}"
+          System.err.println(s"[bench] $name failed: $why")
+          Left(why)
+        }
       }
-      sweep()
-    }
+    val passResults: Seq[Seq[(String, Double)]] = outcomes.map(_.map {
+      case (k, o) => k -> o.getOrElse(Double.PositiveInfinity)
+    })
+    val firstError: Map[String, String] = outcomes.flatten
+      .collect { case (k, Left(why)) => k -> why }.distinctBy(_._1).toMap
     val byPass: Seq[Map[String, Double]] = passResults.map(_.toMap)
     val results = passResults.head.map { case (k, _) =>
       val m = byPass.map(_(k)).min
@@ -131,7 +142,9 @@ object Bench {
     // the bench.
     val perQuery = results.map { case (k, v) =>
       val pp = byPass.map(p => d4(fin(p(k)))).mkString("[", ",", "]")
-      s"""  {"q":"$k","sec":${d4(v)},"pp":$pp}"""
+      val err = firstError.get(k)
+        .fold("")(why => s""","error":${graft.serde.MicroJson.quote(why)}""")
+      s"""  {"q":"$k","sec":${d4(v)},"pp":$pp$err}"""
     }.mkString("[\n", ",\n", "\n]")
     // Default path stamped with the core count (r16, VERDICT r15 #8): the
     // driver benches the same round at two core counts and the second run

@@ -15,6 +15,26 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     EnvelopeQueries.cdcEnvelope(spark, "/root/testdata/sf0.001")
 
+  /** Local cores for every main: `SPARK_GRAFT_CPUS`, else all of them. */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS") match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse(throw
+      new IllegalArgumentException(s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
+  /** The one session factory for every main: `local[cores]`, one shuffle
+    * partition per core, UTC, no UI, WARN logging. */
+  def session(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     CdcQueries.queries ++ EnvelopeQueries.queries ++ AggQueries.queries ++

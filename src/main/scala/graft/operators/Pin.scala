@@ -37,7 +37,7 @@ object Pin {
     * `<dir>/<tag>_pinNN.txt` before materializing it — the pinned
     * stages are where the library's interesting plans live (the
     * returned Dataset is just a block scan). Never set in production;
-    * `graft.tools.ExplainDump` drives it. */
+    * `graft.tools.Catalog explain` drives it. */
   val ExplainDirKey = "graft.pin.explain.dir"
   val ExplainTagKey = "graft.pin.explain.tag"
   /** Debug/profile hook (r15): when "true", print each pin's wall-clock

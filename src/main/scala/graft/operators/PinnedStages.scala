@@ -107,8 +107,9 @@ object PinnedStages {
     }
   }
 
-  /** Unpersist the shared pins too and forget them — pair with dropping
-    * the memos that reference them (e.g. between bench passes). */
+  /** Unpersist the shared pins too and forget them. Call it through
+    * [[SessionMemo.reset]], which first drops the memos that reference
+    * them. */
   def releaseShared(spark: SparkSession): Unit = synchronized {
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (shared.contains(id)) rdd.unpersist(blocking = false)

@@ -23,9 +23,9 @@ import org.apache.spark.sql.SparkSession
   * regenerating fixtures) must call [[clear]] — the memo cannot see
   * filesystem writes.
   *
-  * Bench seam: [[clear]] runs between timed passes (with
-  * `PinnedStages.releaseShared`) so every pass re-pays each producer's
-  * real cost and the per-query min never underclaims.
+  * Between passes, [[reset]] drops every memo and the shared pins
+  * behind them, so every pass re-pays each producer's real cost and the
+  * per-query min never underclaims.
   */
 object SessionMemo {
 
@@ -60,6 +60,16 @@ object SessionMemo {
   }
 
   def clear(): Unit = synchronized(memo.clear())
+
+  /** The one between-pass reset: drop the memo, then the AsOfJoin bounds
+    * cache, then the shared pins. The order matters: releasing the pins
+    * while a memo still holds their DataFrames hands the next pass a
+    * relation whose blocks are gone (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). */
+  def reset(spark: SparkSession): Unit = {
+    clear()
+    AsOfJoin.clearBoundsCache()
+    PinnedStages.releaseShared(spark)
+  }
 
   private[graft] def size: Int = synchronized(memo.size)
 }

@@ -53,34 +53,32 @@ object PcaQueries {
       .repartition(spark.sparkContext.defaultParallelism)
       .createOrReplaceTempView("embeddings")
 
-  // Session-scoped memo (r11): the three catalog queries (project / top2 /
-  // topk) share ONE covariance pass and one component chain per
-  // (session, dir) — deflation is a prefix property (component k does not
-  // depend on how many more will be trained), so serving top2 from the
-  // topk chain is bit-identical to training it alone. The
-  // dd_minhash/TokenizerQueries memo discipline; Bench clears it between
-  // passes so every pass pays the real training cost.
-  private val componentMemo = scala.collection.mutable.Map[
-    (String, String), (Array[Array[Long]], Seq[Array[Long]])]()
-
-  private[graft] def clearSessionMemos(): Unit =
-    synchronized { componentMemo.clear() }
-
-  /** First `k` components for the catalog dir, training only what the
-    * memo does not already hold. */
-  private def trainedComponents(spark: SparkSession, dir: String,
-      k: Int): Seq[Array[Long]] = synchronized {
-    val key = (spark.sparkContext.applicationId + "/" +
-      spark.sparkContext.startTime, dir)
-    val (c, comps) = componentMemo.getOrElse(key, {
-      viewEmb(spark, dir)
-      (covScaled(spark), Seq.empty[Array[Long]])
-    })
-    var cs = comps
-    while (cs.size < k) cs = cs :+ iterate(c, cs)
-    componentMemo(key) = (c, cs)
-    cs.take(k)
+  /** The component chain over one pre-scaled covariance, grown on
+    * demand. Deflation is a prefix property (component k does not depend
+    * on how many more will be trained), so serving top2 from the topk
+    * chain is bit-identical to training it alone, and a k = 1 consumer
+    * never pays for components it does not ask for. */
+  private final class ComponentChain(c: Array[Array[Long]]) {
+    private var cs = Vector.empty[Array[Long]]
+    def take(k: Int): Seq[Array[Long]] = synchronized {
+      while (cs.size < k) cs :+= iterate(c, cs)
+      cs.take(k)
+    }
   }
+
+  /** First `k` components for the catalog dir. The three catalog queries
+    * (project / top2 / topk) share ONE covariance pass and one chain per
+    * (session, dir) through the session memo. */
+  private def trainedComponents(spark: SparkSession, dir: String,
+      k: Int): Seq[Array[Long]] =
+    graft.operators.SessionMemo.cached(spark, s"pcachain/$dir") {
+      viewEmb(spark, dir)
+      new ComponentChain(covScaled(spark))
+    }.take(k)
+
+  /** Kept for callers that predate [[graft.operators.SessionMemo.reset]]
+    * (the benchmark harness): forwards to the one memo's clear. */
+  private[graft] def clearSessionMemos(): Unit = graft.operators.SessionMemo.clear()
 
   /** Power iteration, orthogonalized after each normalization against
     * every PRIOR component in order (the sequential deflation that

@@ -216,11 +216,7 @@ object CdcToCorpus {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val work = java.nio.file.Files.createTempDirectory("cdc-to-corpus").toString
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session()
     stageDocFeed(spark, sfDir, s"$work/feed", nChunks = 6)
     run(spark, s"$work/feed", s"$work/ckpt", s"$work/sink")
     val compacted = compactedDocs(spark, s"$work/sink")

@@ -447,9 +447,7 @@ object AnnIndex {
   /** CLI: `AnnIndex <sfDir> <indexDir>` — build, then serve a demo probe. */
   def main(args: Array[String]): Unit = {
     val Array(sfDir, indexDir) = args.take(2)
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("ann-index").config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    val spark = graft.SparkEntry.session()
     build(spark, sfDir, indexDir)
     val res = topk(spark, indexDir, Seq(0L, 1L, 2L), k = 3, nprobe = 2)
     println(s"[ann-index] served ${res.count()} results from $indexDir")
